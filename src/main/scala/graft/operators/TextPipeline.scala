@@ -555,49 +555,139 @@ object TextPipeline {
       .orderBy("a", "b")
   }
 
-  /** Connected components by min-label propagation ACCELERATED WITH
-    * POINTER JUMPING: each round every node adopts the smallest label
-    * among itself and its neighbors (the Pregel shape), then labels
-    * compose through themselves — `L'(v) = min(L(v), L(L(v)))` — so the
-    * propagation reach roughly DOUBLES per round and convergence is
-    * O(log diameter), not O(diameter). Plain propagation needs ~999
-    * rounds on a 1000-node path (and a measured 57-vector near-dup
-    * chain in the embeddings fixture already blew a 20-round cap); the
-    * jump closes both in ~10. The alternative (large-star/small-star
-    * edge contraction, Kiveris et al.) has the same round bound but
-    * rewrites the EDGE SET through two join+distinct phases per round —
-    * measured 1.4–2.5× slower across q48/q71–q75 on the fixture because
-    * near-dup pair graphs are shallow and the per-round constant
-    * dominates. Here edges are checkpointed ONCE and only the
-    * node-sized label table is rewritten; the jump join touches labels
-    * only. Driver coordinates the loop, executors do all data work;
-    * `localCheckpoint` truncates the growing lineage each round. Labels
-    * only ever decrease, so the fixpoint test stays one scalar sum per
-    * round, and at the fixpoint labels are root-consistent
-    * (`L(L(v)) = L(v)`) and edge-consistent (both endpoints equal), i.e.
-    * every node carries its component's MINIMUM id. */
+  /** Connected components of the undirected graph `pairs(a, b)`: one row
+    * `(id, rep)` per endpoint, `rep` = the minimum id of its component.
+    * Endpoints are cast to long. A pair with a null endpoint is not an
+    * edge and is dropped, so its other endpoint appears only through its
+    * other pairs. Whichever regime below computes it, the result has the
+    * same columns and types, is hash-partitioned on `id` and is cut by
+    * [[Checkpoints.cut]].
+    *
+    * The first job writes the edge checkpoint ([[componentEdges]]) and
+    * counts its rows in the same job. The count picks the regime:
+    *
+    *  - At most [[OneTaskMaxEdgeRows]] rows: [[componentsInOneTask]]
+    *    finishes with union-find in one task, one more job. This is the
+    *    Hash-to-Min step of finishing a small component in one reducer
+    *    instead of paying another iterated job: every round of the loop
+    *    below costs two to four jobs of scheduling latency, while near-dup
+    *    pair graphs are small enough for one task's memory.
+    *  - Above it: [[componentsByPointerJumping]], the min-label
+    *    propagation loop, the only path that works when the edges do not
+    *    fit in one task. `maxIter` bounds its rounds, which some long
+    *    paths exceed (see its doc). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // r13 (guide §2.4, the pageRank treatment): the loop's STATIC side is
-    // partitioned by its loop-join key (dst) ONCE — in the non-broadcast
-    // regime (node-sized label tables at 100 TB cannot broadcast) the
-    // per-round prop join otherwise re-shuffles the EDGE-sized table
-    // every round while only the node-sized label table changes
-    // (`rounds` edge exchanges → 1). Checkpoints.cut (not a raw
-    // localCheckpoint) so the restored partitioning metadata reaches the
-    // loop's planner under AQE (CheckpointMeta) and the
-    // reliable-checkpoint knob covers this loop too.
-    val edges = Checkpoints.cut(pairs.select(col("a").cast("long").as("src"),
-        col("b").cast("long").as("dst"))
-      .union(pairs.select(col("b").cast("long").as("src"),
-        col("a").cast("long").as("dst")))
-      .repartition(col("dst")))
-    // r13 (VERDICT r12 #6): the convergence sum rides the checkpoint
-    // materialization as an observe() metric — CollectMetrics folds
-    // Σrep into the same job that writes the checkpoint blocks, so the
-    // separate one-stage labelSum job per round disappears (exact, no
-    // accumulator-retry heuristics: metrics come from the completed
-    // query execution). The loop's remaining per-round cost is the
-    // prop-join job itself.
+    val (edges, rows) = componentEdges(pairs)
+    if (rows <= OneTaskMaxEdgeRows) componentsInOneTask(edges)
+    else componentsByPointerJumping(edges, maxIter)
+  }
+
+  /** Edge rows (each pair counted in both directions) at or below which
+    * [[connectedComponents]] runs [[componentsInOneTask]].
+    *
+    * Set from CROSSOVER_r14_components.json (4 cores, 10^3 to 10^7 edge
+    * rows, random and path graphs). The one task won at every rung (10^7
+    * random: 17.8 s against the loop's 559 s), so memory sets the bound,
+    * not a speed crossover. Budget: 256 MB of one task's heap, inside the
+    * user memory of Spark's default 1 GB executor ((1024 - 300 MB
+    * reserved) x (1 - spark.memory.fraction 0.6) = 290 MB). The union-find
+    * peaked at 76 B per edge row at 10^6 rows and 49 B at 10^7:
+    * 256 MB / 76 B = 3.5M rows, rounded down to 3M. */
+  private[graft] val OneTaskMaxEdgeRows = 3000000L
+
+  /** The edge checkpoint both regimes read: `(src, dst)` longs holding
+    * both directions of every pair without a null endpoint, partitioned
+    * by `dst` and cut, plus its row count. The count is an `observe()`
+    * metric of the checkpoint job, so it costs no job of its own. The
+    * loop's static side is partitioned by its join key once (the pageRank
+    * treatment): in the non-broadcast regime the per-round join otherwise
+    * re-shuffles the edge-sized table every round. [[Checkpoints.cut]],
+    * not a raw localCheckpoint, so the restored partitioning reaches the
+    * loop's planner under AQE (CheckpointMeta). */
+  private[graft] def componentEdges(pairs: DataFrame): (DataFrame, Long) = {
+    val ends = pairs.select(col("a").cast("long").as("src"),
+      col("b").cast("long").as("dst")).na.drop()
+    val obs = org.apache.spark.sql.Observation()
+    val edges = Checkpoints.cut(ends.union(ends.select(col("dst"), col("src")))
+      .repartition(col("dst"))
+      .observe(obs, count(lit(1)).as("rows")))
+    (edges, obs.get("rows").asInstanceOf[Long])
+  }
+
+  /** Components of [[componentEdges]]' output in one task: the edges move
+    * to a single partition (a narrow coalesce of the checkpoint blocks, no
+    * shuffle), [[unionFindLabels]] labels every endpoint, and the labels
+    * are hash-partitioned on `id` and cut — the loop's output contract. */
+  private[graft] def componentsInOneTask(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    Checkpoints.cut(edges.coalesce(1).as[(Long, Long)]
+      .mapPartitions(unionFindLabels)
+      .toDF("id", "rep")
+      .repartition(col("id")))
+  }
+
+  /** Union-find over edge rows that hold both directions of every pair:
+    * `(id, component minimum)` once per endpoint, in id order. Every
+    * endpoint is a `src`, so the sorted distinct `src`s index the nodes;
+    * only rows with `src < dst` are unioned (the reverse rows add nothing).
+    * Indexes follow id order, so linking the larger root under the smaller
+    * one makes every root its component's minimum id, whatever order the
+    * rows arrive in. `find` compresses the path it walks. */
+  private[graft] def unionFindLabels(
+      edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val srcs = new scala.collection.mutable.ArrayBuilder.ofLong
+    val lo = new scala.collection.mutable.ArrayBuilder.ofLong
+    val hi = new scala.collection.mutable.ArrayBuilder.ofLong
+    edges.foreach { case (s, d) =>
+      srcs += s
+      if (s < d) { lo += s; hi += d }
+    }
+    val ids = srcs.result()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices) if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    val (los, his) = (lo.result(), hi.result())
+    for (e <- los.indices) {
+      val (ra, rb) = (find(index(los(e))), find(index(his(e))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, n).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Components of [[componentEdges]]' output by min-label propagation
+    * accelerated with pointer jumping: each round every node adopts the
+    * smallest label among itself and its neighbours (the Pregel shape),
+    * then labels compose through themselves, `L'(v) = min(L(v), L(L(v)))`.
+    * Where labels chain toward the minimum the reach doubles per round,
+    * but only a node's own label is lowered, never that of the node it
+    * points to: where labels chain away from the minimum (a long path
+    * with ids in random order, or 0, 500, 499, ..., 1) the minimum still
+    * travels one hop per round and `maxIter` = 50 is not enough
+    * (CROSSOVER_r14_components.json). Large-star/small-star edge
+    * contraction (Kiveris et al.) bounds the rounds by O(log^2 n) but
+    * rewrites the edge set through two join+distinct phases per round,
+    * measured 1.4-2.5x slower on the fixture's shallow pair graphs; here
+    * the edges are cut once and only the node-sized label table is
+    * rewritten.
+    * The driver coordinates, executors do the data work, and each round's
+    * label table is cut to truncate the lineage. Labels only decrease, so
+    * the fixpoint test is one scalar sum per round; at the fixpoint labels
+    * are root-consistent (`L(L(v)) = L(v)`) and edge-consistent, so every
+    * node carries its component's minimum id. */
+  private[graft] def componentsByPointerJumping(edges: DataFrame,
+                                                maxIter: Int = 50): DataFrame = {
+    // the convergence sum is an observe() metric of the job that writes
+    // the checkpoint, not a job of its own (exact: metrics come from the
+    // completed query execution, no accumulator-retry heuristics)
     def checkpointWithSum(df: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
       val cp = Checkpoints.cut(
@@ -615,30 +705,12 @@ object TextPipeline {
         .select(edges("src").as("id"), col("rep"))
       val oneHop = labels.select("id", "rep").union(prop)
         .groupBy("id").agg(min("rep").as("rep"))
-      // pointer jump: follow the label's own label — labels is node-sized
-      // (≪ edges), so each self-join is cheap relative to the prop join.
-      // oneHop ids are unique and L(rep) <= rep, so the jump is a 1:1
-      // left join + coalesce, no re-aggregation needed. Near-dup graphs
-      // are shallow and converge in 2-3 plain rounds; only engage the
-      // jump once plain propagation has NOT closed by round 3, so the
-      // common case pays nothing and deep chains still double per round.
-      // r12 note: two variants were built and MEASURED WORSE on the
-      // 12-round q74 graph, so this shape stands — a double
-      // jump(jump(·)) per round (the un-checkpointed round subtree
-      // appears 4× in the plan; q74 3.2→5.0 s) and jump-from-round-0
-      // (extra join stages in the shallow rounds buy nothing; 4.7 s).
-      // The round cost is stage-scheduling latency, not data — fewer,
-      // heavier rounds is the wrong trade here.
-      // labels only ever decrease, so the fixpoint test is one scalar
-      // aggregate per round, not a join of old vs new — and it rides
-      // the checkpoint job (checkpointWithSum above), not its own
-      // r13 reprice of the r12-rejected double jump (VERDICT r12 "Not
-      // yet optimized" #2): re-A/B'd with the checkpoint-partitioning
-      // restore in place — jump(jump(·)) per round still measured WORSE
-      // on the same interleaved min-of-5 subset (q74 4.39 vs 3.59 s,
-      // subset total 10.74 vs 9.58 s): the 4x oneHop subtree
-      // re-execution outweighs the halved round count at any scale
-      // where rounds are latency-bound. Single jump stands.
+      // pointer jump: follow the label's own label. oneHop ids are unique
+      // and L(rep) <= rep, so the jump is a 1:1 left join + coalesce. It
+      // starts at round 2: shallow graphs close in plain rounds and pay
+      // nothing for it. A double jump(jump(·)) per round and a jump from
+      // round 0 were both measured slower (the un-cut round subtree runs
+      // 4× in the double jump's plan).
       val (next, nextSum) = checkpointWithSum(if (iter < 2) oneHop else {
         val hop2 = oneHop.select(col("id").as("jid"), col("rep").as("jrep"))
         oneHop.join(hop2, col("rep") === col("jid"), "left")

@@ -518,11 +518,9 @@ object DocDedup {
     }
 
     val allPairs = spark.read.parquet(s"$stateDir/pairs").select("a", "b")
-    val losers =
-      if (allPairs.isEmpty) allPairs.select(col("a").as("doc_id"))
-      else TextPipeline.connectedComponents(allPairs)
-        .where(col("id") =!= col("rep"))
-        .select(col("id").as("doc_id"))
+    val losers = TextPipeline.connectedComponents(allPairs)
+      .where(col("id") =!= col("rep"))
+      .select(col("id").as("doc_id"))
     // un-hinted anti join: losers is O(duplicate count) — AQE broadcasts
     // it when small, shuffles when a dup-heavy feed makes it O(corpus)
     spark.read.parquet(s"$stateDir/ids").select("doc_id")

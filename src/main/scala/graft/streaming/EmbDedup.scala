@@ -521,11 +521,9 @@ object EmbDedup {
     }
 
     val allPairs = spark.read.parquet(s"$stateDir/pairs").select("a", "b")
-    val losers =
-      if (allPairs.isEmpty) allPairs.select(col("a").as("vec_id"))
-      else TextPipeline.connectedComponents(allPairs)
-        .where(col("id") =!= col("rep"))
-        .select(col("id").as("vec_id"))
+    val losers = TextPipeline.connectedComponents(allPairs)
+      .where(col("id") =!= col("rep"))
+      .select(col("id").as("vec_id"))
     // un-hinted anti join: losers is O(duplicate count) — AQE broadcasts
     // it when small, shuffles when a dup-heavy feed makes it O(corpus)
     spark.read.parquet(s"$stateDir/ids").select("vec_id")

@@ -284,10 +284,14 @@ class PropertySpec extends SparkSpec {
       val edges = Seq.fill(m)((nextInt(n).toLong, nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val want = unionFind(n, edges)
-      val got = TextPipeline.connectedComponents(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"n=$n m=$m: " +
-        s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
+      val (cut, _) = TextPipeline.componentEdges(edges.toDF("a", "b"))
+      for ((path, labels) <- Seq(
+          "one task" -> TextPipeline.componentsInOneTask(cut),
+          "loop" -> TextPipeline.componentsByPointerJumping(cut))) {
+        val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"$path n=$n m=$m: " +
+          s"diff=${(got.toSet -- want.toSet).take(5)} / ${(want.toSet -- got.toSet).take(5)}")
+      }
     }
   }
 

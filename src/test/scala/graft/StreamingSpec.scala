@@ -750,6 +750,34 @@ class StreamingSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("survivor index: epochs that verify no pair keep every ingested id " +
+    "(all-distinct docs and all-distinct vectors)") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("nopairs").toString
+    def snapshot(dir: String, epoch: Int, idCol: String): Set[Long] =
+      spark.read.parquet(s"$dir/epoch=$epoch").select(idCol).as[Long].collect().toSet
+    // disjoint vocabularies: every Jaccard is 0 ("aa aaa ...", "bb bbb ...")
+    val docs = (0 until 6).map { i =>
+      val c = ('a' + i).toChar.toString
+      DocDedup.Doc(i.toLong, (2 to 9).map(c * _).mkString(" "))
+    }
+    // orthogonal unit vectors: every cosine is 0
+    val vecs = (0 until 6).map(i =>
+      streaming.EmbDedup.Vec(i.toLong, Seq.tabulate(6)(j => if (i == j) 1.0 else 0.0)))
+    for (epoch <- 0 until 2) {
+      val slice = (3 * epoch) until (3 * epoch + 3)
+      DocDedup.ingestEpoch(slice.map(docs).toDF(), 0.8, s"$root/ds",
+        s"$root/dout", epoch.toLong)
+      streaming.EmbDedup.ingestEpoch(slice.map(vecs).toDF(), 0.3, s"$root/es",
+        s"$root/eout", epoch.toLong)
+      val ingested = (0L until 3L * epoch + 3).toSet
+      assert(spark.read.parquet(s"$root/ds/pairs").count() == 0L)
+      assert(spark.read.parquet(s"$root/es/pairs").count() == 0L)
+      assert(snapshot(s"$root/dout", epoch, "doc_id") == ingested)
+      assert(snapshot(s"$root/eout", epoch, "vec_id") == ingested)
+    }
+  }
+
   test("EmbDedup.bandedRows signatures match the batch hyperplaneBanded path") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sf0001).where(col("vec_id") < 100)

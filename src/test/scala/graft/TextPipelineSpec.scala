@@ -53,13 +53,123 @@ class TextPipelineSpec extends SparkSpec {
   test("connectedComponents: a 1000-node path converges in O(log n) rounds") {
     import spark.implicits._
     // Worst case for label propagation (needs ~diameter = 999 rounds);
-    // star contraction must close it well inside the default cap of 50.
-    // Ids are shuffled so the min does not ride the path monotonically.
+    // pointer jumping must close it well inside the default cap of 50.
+    // Run on the loop itself: connectedComponents finishes a graph this
+    // small in one union-find task, which has no rounds to bound.
+    // Ids are shuffled so the min does not ride the path monotonically;
+    // the loop closes this order, not every order (next test).
     val perm = (0 until 1000).map(i => (i * 541L) % 1000L) // 541 coprime to 1000
     val pairs = (0 until 999).map(i => (perm(i), perm(i + 1))).toDF("a", "b")
-    val got = TextPipeline.connectedComponents(pairs)
+    val got = TextPipeline.componentsByPointerJumping(
+      TextPipeline.componentEdges(pairs)._1)
     assert(got.count() == 1000L)
     assert(got.select("rep").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
+  test("connectedComponents: a path the loop cannot close in 50 rounds " +
+    "finishes in one task") {
+    import spark.implicits._
+    // ids 0, 500, 499, ..., 1 along the path: labels chain toward 1 and
+    // the minimum 0 reaches the far end one hop per loop round
+    val path = 0L +: (500L to 1L by -1L)
+    val pairs = path.zip(path.tail).toDF("a", "b")
+    val got = labelMap(TextPipeline.connectedComponents(pairs))
+    assert(got == path.map(_ -> 0L).toMap)
+  }
+
+  /** Both component regimes on the same pairs: the one-task finish and
+    * the pointer-jumping loop, each over the shared edge checkpoint. */
+  private def componentsBothWays(pairs: org.apache.spark.sql.DataFrame) = {
+    val (edges, _) = TextPipeline.componentEdges(pairs)
+    Seq("one task" -> TextPipeline.componentsInOneTask(edges),
+      "loop" -> TextPipeline.componentsByPointerJumping(edges))
+  }
+
+  private def labelMap(labels: org.apache.spark.sql.DataFrame) =
+    labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connectedComponents: labels ignore edge order, direction, input " +
+    "partitioning and task retries on both regimes") {
+    import spark.implicits._
+    // two chains merged by a late bridge, a star, and a self-loop
+    val edges = Seq((9L, 7L), (7L, 5L), (5L, 3L), (30L, 40L), (40L, 50L),
+      (50L, 3L), (100L, 101L), (100L, 102L), (100L, 103L), (77L, 77L))
+    val want = Map(3L -> 3L, 5L -> 3L, 7L -> 3L, 9L -> 3L, 30L -> 3L,
+      40L -> 3L, 50L -> 3L, 100L -> 100L, 101L -> 100L, 102L -> 100L,
+      103L -> 100L, 77L -> 77L)
+    // every task's first attempt fails, so each edge job runs on retries
+    val crashOnce = udf { (x: Long) =>
+      if (org.apache.spark.TaskContext.get.attemptNumber() == 0)
+        throw new RuntimeException("injected crash")
+      x
+    }
+    val rng = new scala.util.Random(11)
+    val variants = Seq(
+      edges.toDF("a", "b"),
+      edges.reverse.toDF("a", "b"),
+      rng.shuffle(edges).map(_.swap).toDF("a", "b"),
+      rng.shuffle(edges).toDF("a", "b").repartition(7),
+      edges.toDF("a", "b").coalesce(1),
+      // an RDD source, so the optimizer cannot fold the UDF on the driver
+      spark.sparkContext.parallelize(edges, 3).toDF("a", "b")
+        .select(crashOnce(col("a")).as("a"), col("b")))
+    // the edge count rides the checkpoint job, retried attempts included
+    assert(TextPipeline.componentEdges(variants.last)._2 == 2L * edges.size)
+    for (pairs <- variants) {
+      assert(labelMap(TextPipeline.connectedComponents(pairs)) == want)
+      for ((name, labels) <- componentsBothWays(pairs))
+        assert(labelMap(labels) == want, name)
+    }
+  }
+
+  test("connectedComponents: an empty pair frame gives zero (id long, " +
+    "rep long) rows on both regimes") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    val emptyInt = Seq.empty[(Int, Int)].toDF("a", "b")
+    val runs = ("connectedComponents" -> TextPipeline.connectedComponents(empty)) +:
+      ("connectedComponents(int)" -> TextPipeline.connectedComponents(emptyInt)) +:
+      componentsBothWays(empty)
+    for ((name, labels) <- runs) {
+      assert(labels.dtypes.toSeq == Seq("id" -> "LongType", "rep" -> "LongType"), name)
+      assert(labels.count() == 0L, name)
+    }
+  }
+
+  test("connectedComponents: pairs with a null endpoint are dropped on both " +
+    "regimes") {
+    import spark.implicits._
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
+      (null, 3L), (null, null), (4L, 5L), (6L, null)).toDF("a", "b")
+    val want = Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L)
+    assert(labelMap(TextPipeline.connectedComponents(pairs)) == want)
+    for ((name, labels) <- componentsBothWays(pairs))
+      assert(labelMap(labels) == want, name)
+  }
+
+  test("connectedComponents: one-task labels keep the hash partitioning on " +
+    "id through Checkpoints.cut, so keyed consumers plan no exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.{
+      CoalescedHashPartitioning, HashPartitioning}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    val labels = TextPipeline.connectedComponents(pairs)
+    val hashedOn = labels.queryExecution.executedPlan.outputPartitioning match {
+      case h: HashPartitioning => h.expressions
+      case c: CoalescedHashPartitioning => c.from.expressions
+      case other => fail(s"labels report $other")
+    }
+    assert(hashedOn.map(_.references.map(_.name).toSeq) == Seq(Seq("id")))
+    // the survivor shape of dedupCorpus/dedupEmbeddings: losers keyed by id
+    val losers = labels.where(col("id") =!= col("rep")).select(col("id").as("doc_id"))
+    val plan = losers.groupBy("doc_id").count().queryExecution.executedPlan
+    val exchanges = plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan.collect { case e: ShuffleExchangeExec => e }
+      case p => p.collect { case e: ShuffleExchangeExec => e }
+    }
+    assert(exchanges.isEmpty, s"labels re-shuffled on id:\n$plan")
   }
 
   test("hammingNeighborPairs (banded) == brute-force all-pairs, any k") {
